@@ -9,10 +9,10 @@ Extras folded into the same line:
   alongside under "contract_variants_sec" (the md5-affine signatures and
   hit-highlight columns exist for DuckDB replay, not for production).
   NOTE: contract and production forms are DIFFERENT topologies (the bm25
-  contract query derives lens from postings and skips the display-column
-  join), so they are not a less-work-is-faster pair; the
-  "bm25_operator_pair_sec" field IS such a pair — the same operator on the
-  same inputs with_hits=True vs False;
+  contract query shares the production scoring but ranks by the rounded
+  score and skips the display-column join), so they are not a
+  less-work-is-faster pair; the "bm25_operator_pair_sec" field IS such a
+  pair — the same operator on the same inputs with_hits=True vs False;
 - "query_samples_sec": all 3 raw samples behind each median, so
   run-to-run spread (single-JVM noise) stays visible per query;
 - "triples_per_sec": throughput of the KG pipeline (fixture pages -> triples)
@@ -202,14 +202,14 @@ def run_queries(
             contract[name] = timed(QUERIES[name], f"{name}:contract")
     # apples-to-apples hits pair: the SAME operator on the SAME inputs with
     # and without the ES-highlight columns. (The contract query q_bm25_*
-    # is a third topology — it derives lens from postings and never joins
-    # the display columns — so prod-vs-contract alone cannot support a
-    # "score-only must be faster" claim; this pair can.) Both sides share
-    # ONE workload definition (bm25_operator_workload) so they cannot
-    # drift, and both are timed fresh BACK-TO-BACK — the score-only side
-    # deliberately is NOT the headline's earlier samples, which ran minutes
-    # before in a colder session state and would re-open the time-separated
-    # comparison this pair exists to close.
+    # scores through the same bm25_scores but ranks by the ROUNDED score
+    # and never joins the display columns — so prod-vs-contract alone
+    # cannot support a "score-only must be faster" claim; this pair can.)
+    # Both sides share ONE workload definition (bm25_operator_workload) so
+    # they cannot drift, and both are timed fresh BACK-TO-BACK — the
+    # score-only side deliberately is NOT the headline's earlier samples,
+    # which ran minutes before in a colder session state and would re-open
+    # the time-separated comparison this pair exists to close.
     hits_pair = {
         "with_hits": timed(bm25_operator_workload(True), "bm25_operator:with_hits"),
         "score_only": timed(

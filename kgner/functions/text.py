@@ -386,11 +386,6 @@ def subtoken_len_col(sentence: Column) -> Column:
     return F.size(F.regexp_extract_all(sentence, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def sentence_key_col(tokens: Column) -> Column:
-    """Lowercased ws-joined retrieval key (kb/context_process.py:188-211)."""
-    return F.lower(F.concat_ws(" ", tokens))
-
-
 def with_sentences(pages: DataFrame) -> DataFrame:
     """pages -> sentences(url, lang, sent_id, sentence, tokens, n_tokens,
     subtoken_len).

@@ -1,10 +1,7 @@
-"""Table I/O with Iceberg -> parquet fallback.
+"""Table I/O: each stage table is a parquet directory under the workdir.
 
-The production design writes Iceberg (partition transforms days(warc_ts),
-bucket(url)/bucket(subj), snapshot-based resume). The sandbox has no Iceberg
-jars, so the same interface falls back to parquet directories; a stage is
-"committed" when its directory has Spark's _SUCCESS marker, which stands in
-for an Iceberg snapshot in the resume logic.
+A stage is "committed" when its directory has Spark's _SUCCESS marker;
+resume skips committed stages.
 """
 
 from __future__ import annotations
@@ -12,14 +9,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def table_path(workdir: str, name: str) -> str:

@@ -242,7 +242,8 @@ def span_f1(
     remove_x: bool = False,
     mention_only: bool = False,
 ) -> DataFrame:
-    """Chunk-level P/R/F1 per label + micro, conlleval semantics
+    """Chunk-level P/R/F1, one row per label (no micro total row: sum
+    tp/fp/fn over the rows for it), conlleval semantics
     (/root/reference/conlleval_perl.py:207-350) as a pure DataFrame agg.
 
     remove_x=True excludes filler type X from scoring on BOTH sides

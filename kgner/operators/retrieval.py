@@ -33,25 +33,23 @@ from pyspark.sql.window import Window
 from kgner.bm25 import B, K1
 
 
-def bm25_topk(
+def bm25_scores(
     queries: DataFrame,
     postings: DataFrame,
     docs: DataFrame,
-    k: int = 10,
     boost_entities: DataFrame | None = None,
     title_boost: float = 2.0,
     max_df_ratio: float | None = None,
     with_hits: bool = True,
     lang_col: str | None = None,
 ) -> DataFrame:
-    """-> retrievals(query_id, rank, doc_id, score, sentence, title, url,
-    [paragraph,] matched_terms array<string>, highlight string) —
-    paragraph included when the docs table carries it; matched_terms and
-    highlight only when `with_hits` (ES computes highlights on request —
-    a production top-k that doesn't consume them shouldn't pay the
-    collect_set + markup rebuild).
+    """-> (query_id, doc_id, score double[, matched_terms array<string>]):
+    the raw (unrounded, unranked) BM25 score of every doc that matches at
+    least one query term — the one Spark-side BM25 implementation, ranked
+    by bm25_topk and by the oracle-checked contract queries.
 
     queries: (query_id, tokens array<string>) — tokens already lowercased.
+    docs: (doc_id, len[, title]) — title only read with boost_entities.
     boost_entities: optional (query_id, entity string) rows; adds the
     reference's entity->title boost clause (generate_data.py:52-55) with
     ES-exact semantics: bool.should SUMS the clause scores, and
@@ -62,10 +60,9 @@ def bm25_topk(
     docCount, not the corpus size). So
     score = text_bm25 + title_boost * title_bm25(entity terms).
 
-    matched_terms/highlight mirror the ES highlight hits the reference's
-    retrieval rows carry (kb/generate_data.py:44-48,62-68; row format
-    README.md:248-272): the query terms that scored in this doc, and the
-    sentence with each matched token wrapped in <hit></hit>.
+    matched_terms (only when `with_hits`): the query terms that scored in
+    this doc — the ES highlight hits the reference's retrieval rows carry
+    (kb/generate_data.py:44-48,62-68).
 
     max_df_ratio: THE web-scale knob. Query terms whose document frequency
     exceeds this fraction of the corpus are dropped BEFORE the postings join
@@ -251,6 +248,37 @@ def bm25_topk(
             )
         )
 
+    return scored
+
+
+def bm25_topk(
+    queries: DataFrame,
+    postings: DataFrame,
+    docs: DataFrame,
+    k: int = 10,
+    boost_entities: DataFrame | None = None,
+    title_boost: float = 2.0,
+    max_df_ratio: float | None = None,
+    with_hits: bool = True,
+    lang_col: str | None = None,
+) -> DataFrame:
+    """-> retrievals(query_id, rank, doc_id, score, sentence, title, url,
+    [paragraph,] matched_terms array<string>, highlight string) —
+    paragraph included when the docs table carries it; matched_terms and
+    highlight only when `with_hits` (ES computes highlights on request —
+    a production top-k that doesn't consume them shouldn't pay the
+    collect_set + markup rebuild).
+
+    Scores come from bm25_scores (same arguments; see it for the boost,
+    max_df_ratio and lang_col semantics); docs additionally carries the
+    display columns (sentence, title, url). highlight is the sentence with
+    each matched token wrapped in <hit></hit> (row format
+    README.md:248-272).
+    """
+    scored = bm25_scores(
+        queries, postings, docs, boost_entities, title_boost, max_df_ratio,
+        with_hits, lang_col,
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )

@@ -461,20 +461,16 @@ FROM documents GROUP BY 1
 
 
 def q_exact_dedup(spark, sf_dir):
-    """Dedup #1: exact hash-groupBy (kgner.operators.dedup.exact_dedup
-    semantics, keyed here by normalized text for the SQL oracle).
+    """Dedup #1: exact hash-groupBy through kgner.operators.dedup.exact_dedup
+    (the oracle groups by the same normalized text the fingerprint hashes).
 
     No spread_scan: same rationale as q_vocab (r6 A/B — wash at sf1.0,
     fixed loss at small SFs)."""
-    d = _t(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    return (
-        d.groupBy(norm.alias("norm"))
-        .agg(
-            F.min("doc_id").cast("long").alias("keep_id"),
-            F.count(F.lit(1)).alias("group_size"),
-        )
-        .select("keep_id", "group_size")
+    from kgner.operators.dedup import exact_dedup
+
+    return exact_dedup(_t(spark, sf_dir, "documents")).select(
+        F.col("keep_id").cast("long").alias("keep_id"),
+        F.col("group_size").cast("long").alias("group_size"),
     )
 
 
@@ -961,12 +957,13 @@ FROM e a JOIN e b ON a.doc_id = b.doc_id AND a.tok < b.tok
 
 def bm25_contract_inputs(spark, sf_dir):
     """ONE definition of the bm25 contract workload — shared by
-    q_bm25_retrieval AND bench.py's production variant so the two
-    benchmarked variants can never drift into measuring different
-    workloads. The corpus is tokenized ONCE (the checkpointed postings
-    scan): doc lens come back from postings as sum(tf) — identical to the
-    raw token count — and the query set's tokenize touches only the
-    filter-pruned doc_id < 5 rows."""
+    q_bm25_retrieval, q_bm25_entity_boost AND bench.py's production
+    variant. All of them score through operators.retrieval.bm25_scores, so
+    the contract queries check the code the production bm25_topk runs; the
+    only contract-specific step is _rank_rounded. The corpus is tokenized
+    ONCE (the checkpointed postings scan): doc lens come back from postings
+    as sum(tf) — identical to the raw token count — and the query set's
+    tokenize touches only the filter-pruned doc_id < 5 rows."""
     d = _t(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
     # spread only the corpus-tokenize side; the query side keeps its raw
@@ -999,64 +996,40 @@ def bm25_contract_inputs(spark, sf_dir):
     return queries, postings, docs
 
 
-def q_bm25_retrieval(spark, sf_dir):
-    """J-1 FLAGSHIP: BM25 top-k similarity join — the documents table is both
-    corpus (postings/docs) and query set (first 6 tokens of doc_id < 5).
-    Ranks order by ROUNDED score so cross-engine float noise can't flip them."""
-    queries, postings, _ = bm25_contract_inputs(spark, sf_dir)
-    # doc lens = sum(tf) over postings (identical value to counting raw
-    # tokens — no second corpus scan)
-    lens = postings.groupBy("doc_id").agg(F.sum("tf").alias("len"))
-    stats = lens.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    qt = queries.select("query_id", F.explode("qterms").alias("term"))
-    from kgner.bm25 import B, K1
-
-    # dfreq is VOCABULARY-sized and lens is CORPUS-sized — neither is
-    # force-broadcast (collecting 2.6M dfreq rows to the driver cost more
-    # than the join it saved at sf1.0, and both are unbounded at scale);
-    # the qt-join output is query-term-sized, so AQE broadcasts the small
-    # side of each join from runtime stats instead.
-    scored = (
-        qt.join(postings, "term")
-        .join(dfreq, "term")
-        .join(lens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf")
-            * (K1 + 1.0)
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avg_len"))),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum("contrib"), 6).alias("score"),
-            # highlight-hits parity (kb/generate_data.py:62-68): which query
-            # terms matched this doc; qt and postings are both term-distinct
-            # so count == distinct matched terms
-            F.count(F.lit(1)).cast("long").alias("n_matched"),
-            F.array_join(F.sort_array(F.collect_set("term")), ",").alias(
-                "matched_terms"
-            ),
-        )
-    )
+def _rank_rounded(scored: DataFrame) -> DataFrame:
+    """Contract top-10 over bm25_scores output: the score ROUNDED to 6
+    places, ranked by (rounded score desc, doc_id asc) so cross-engine
+    float noise can't flip ranks. bm25_topk ranks the raw score."""
+    scored = scored.withColumn("score", F.round("score", 6))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 10)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            "rank",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "score",
-            "n_matched",
-            "matched_terms",
-        )
+        .withColumn("query_id", F.col("query_id").cast("long"))
+        .withColumn("doc_id", F.col("doc_id").cast("long"))
+    )
+
+
+def q_bm25_retrieval(spark, sf_dir):
+    """J-1 FLAGSHIP: BM25 top-k similarity join through the pipeline's
+    bm25_scores — the documents table is both corpus (postings/docs) and
+    query set (first 6 tokens of doc_id < 5)."""
+    from kgner.operators.retrieval import bm25_scores
+
+    queries, postings, docs = bm25_contract_inputs(spark, sf_dir)
+    scored = bm25_scores(
+        queries.select("query_id", F.col("qterms").alias("tokens")), postings, docs
+    )
+    return _rank_rounded(scored).select(
+        "query_id",
+        "rank",
+        "doc_id",
+        "score",
+        # highlight-hits parity (kb/generate_data.py:62-68)
+        F.size("matched_terms").cast("long").alias("n_matched"),
+        F.array_join("matched_terms", ",").alias("matched_terms"),
     )
 
 
@@ -1107,7 +1080,8 @@ def q_bm25_retrieval_lang(spark, sf_dir):
     One query per language (each lang's min doc_id). Every vocabulary term
     of the synthetic corpus occurs in all 5 languages, so per-lang df
     differs from global df for every scored term — running this unscoped
-    (the "mix" mode) changes every score and hash-mismatches."""
+    (the "mix" mode, bm25_scores without lang_col) changes every score and
+    hash-mismatches."""
     d = _t(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
     postings = (
@@ -1117,47 +1091,19 @@ def q_bm25_retrieval_lang(spark, sf_dir):
         .localCheckpoint(eager=False)  # one tokenize for lens/stats/df/join
     )
     lens = postings.groupBy("doc_id", "lang").agg(F.sum("tf").alias("len"))
-    stats = lens.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
-    )
-    dfreq = postings.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("df"))
     qdocs = d.groupBy("lang").agg(F.min("doc_id").alias("doc_id"))
     queries = d.join(F.broadcast(qdocs), ["lang", "doc_id"]).select(
         F.col("doc_id").alias("query_id"),
         "lang",
-        F.array_distinct(F.slice(toks, 1, 6)).alias("qterms"),
+        F.array_distinct(F.slice(toks, 1, 6)).alias("tokens"),
     )
-    qt = queries.select("query_id", "lang", F.explode("qterms").alias("term"))
-    from kgner.bm25 import B, K1
+    from kgner.operators.retrieval import bm25_scores
 
-    scored = (
-        qt.join(postings, ["term", "lang"])
-        .join(F.broadcast(dfreq), ["term", "lang"])
-        .join(F.broadcast(lens.select("doc_id", "len")), "doc_id")
-        .join(F.broadcast(stats), "lang")
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf")
-            * (K1 + 1.0)
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avg_len"))),
-        )
-        .groupBy("query_id", "lang", "doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
+    scored = bm25_scores(queries, postings, lens, with_hits=False, lang_col="lang")
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            "lang",
-            "rank",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "score",
-        )
+        _rank_rounded(scored)
+        .join(F.broadcast(queries.select("query_id", "lang")), "query_id")
+        .select("query_id", "lang", "rank", "doc_id", "score")
     )
 
 
@@ -1256,89 +1202,32 @@ def q_bm25_entity_boost(spark, sf_dir):
     boost: 2.0})] — ES SUMS the clause scores, and the boost MULTIPLIES the
     TITLE-FIELD BM25 score (tf in the title, title length / avg title
     length as the field norm, df = #docs whose title has the term).
-    score = text_bm25 + 2.0 * title_bm25(entity terms). Title = first 2
-    tokens of the doc; boost terms per query = gazetteer tokens in the
-    query. (Upgraded r3 from a flat-additive simplification.)"""
-    d = _t(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
-    doc_toks = d.select(F.col("doc_id"), F.explode(toks).alias("term"))
-    postings = (
-        doc_toks.groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)  # one tokenize+explode for all consumers
-    )
-    lens = postings.groupBy("doc_id").agg(F.sum("tf").alias("len"))
-    stats = lens.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len"))
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    queries = d.filter(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_distinct(F.slice(toks, 1, 6)).alias("qterms"),
-    )
-    qt = queries.select("query_id", F.explode("qterms").alias("term"))
-    from kgner.bm25 import B, K1
+    score = text_bm25 + 2.0 * title_bm25(entity terms), scored by
+    bm25_scores' boost clause. Title = first 2 tokens of the doc; boost
+    terms per query = gazetteer tokens in the query. Every document has a
+    non-empty title, so the title field's N is the corpus N the oracle
+    uses."""
+    from kgner.operators.retrieval import bm25_scores
 
-    scored = (
-        qt.join(postings, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(lens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf")
-            * (K1 + 1.0)
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avg_len"))),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("raw"))
+    queries, postings, docs = bm25_contract_inputs(spark, sf_dir)
+    docs = docs.withColumn(
+        "title", F.array_join(F.slice(_toks(F.col("sentence")), 1, 2), " ")
     )
     gaz = F.array(*[F.lit(g) for g in GAZ])
-    # title-field statistics: tf within the 2-token title, field length,
-    # per-term title df, corpus avg title length
-    ttoks = d.select("doc_id", F.slice(toks, 1, 2).alias("ttoks"))
-    tpostings = (
-        ttoks.select(
-            "doc_id", F.size("ttoks").alias("tlen"), F.explode("ttoks").alias("term")
-        )
-        .groupBy("doc_id", "tlen", "term")
-        .agg(F.count(F.lit(1)).alias("ttf"))
-    )
-    tstats = ttoks.agg(F.avg(F.size("ttoks")).alias("avg_tlen"))
-    tdf = tpostings.groupBy("term").agg(F.count(F.lit(1)).alias("tdf"))
-    boost_terms = queries.select(
+    boost = queries.select(
         "query_id",
-        F.explode(F.filter("qterms", lambda t: F.array_contains(gaz, t))).alias("term"),
-    ).distinct()
-    boosts = (
-        boost_terms.join(tpostings, "term")
-        .join(F.broadcast(tdf), "term")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .crossJoin(F.broadcast(tstats))
-        .withColumn(
-            "tcontrib",
-            F.log(1.0 + (F.col("n_docs") - F.col("tdf") + 0.5) / (F.col("tdf") + 0.5))
-            * F.col("ttf")
-            * (K1 + 1.0)
-            / (F.col("ttf") + K1 * (1.0 - B + B * F.col("tlen") / F.col("avg_tlen"))),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg((F.lit(2.0) * F.sum("tcontrib")).alias("boost"))
+        F.explode(F.filter("qterms", lambda t: F.array_contains(gaz, t))).alias(
+            "entity"
+        ),
     )
-    total = (
-        scored.join(boosts, ["query_id", "doc_id"], "left")
-        .withColumn("score", F.round(F.col("raw") + F.coalesce("boost", F.lit(0.0)), 6))
+    scored = bm25_scores(
+        queries.select("query_id", F.col("qterms").alias("tokens")),
+        postings,
+        docs,
+        boost_entities=boost,
+        with_hits=False,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            "rank",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "score",
-        )
-    )
+    return _rank_rounded(scored).select("query_id", "rank", "doc_id", "score")
 
 
 ORACLE_BM25_BOOST = r"""

@@ -16,6 +16,8 @@ SUBSET = [
     "pricing_summary",
     "vocab",
     "bm25_retrieval",
+    "bm25_retrieval_lang",
+    "bm25_entity_boost",
     "entity_spans",
     "sessionize",
     "cosine_topk",
