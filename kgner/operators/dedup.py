@@ -46,15 +46,23 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _shingle_arr(text_col: str, n: int):
-    """Column expr: the doc's DISTINCT word-n-gram shingle array.
+def _tokens(text_col: str):
+    """Column expr: the doc's word tokens, in ONE regex pass (split on \\s+
+    after a space-only trim) — the DuckDB oracles replay this exact form,
+    including the '' edge tokens that text with leading/trailing non-space
+    whitespace produces."""
+    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
 
-    Tokenizes with ONE regex pass (split on \\s+ after a space-only trim)
-    — the DuckDB oracles replay this exact form (including the '' edge
-    tokens text with leading/trailing non-space whitespace produces), and
-    it skips the old regexp_replace normalize pass over the full text
-    (~25% of shingling cost at sf0.1)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+
+def _shingle_arr(toks_col: str, n: int):
+    """Column expr: the DISTINCT word-n-gram shingle array of the token
+    array column `toks_col`.
+
+    Takes a COLUMN, not the split expression: the transform lambda reads
+    the tokens once per shingle, and an expression there would re-split
+    the whole document per shingle (O(L^2) per doc — the giant-doc cost).
+    A bound column is computed once per row."""
+    toks = F.col(toks_col)
     return F.when(
         F.size(toks) < n, F.array(F.concat_ws(" ", toks))
     ).otherwise(
@@ -74,14 +82,19 @@ def shingle_arrays(
     doc — the compact form consumers cache: re-exploding a cached array
     column is pure row expansion, while caching the exploded rows pays
     per-row overhead on millions of rows (measured ~7 s vs ~1 s for the 5.2M
-    shingles of the sf1.0 bench corpus)."""
+    shingles of the sf1.0 bench corpus).
+
+    The token array is projected as its own column first, so each doc is
+    tokenized once; it stays a separate projection because it is used more
+    than once below (CollapseProject does not inline a multi-use
+    non-trivial expression)."""
     from kgner.operators.partitioning import spread_scan
 
     # single-file inputs would run the whole explosion on 1-2 cores (§2.5)
     docs = spread_scan(docs, id_col)
     return docs.select(
-        F.col(id_col).alias("doc_id"), _shingle_arr(text_col, n).alias("arr0")
-    )
+        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("toks")
+    ).select("doc_id", _shingle_arr("toks", n).alias("arr0"))
 
 
 def shingle_df(
@@ -397,49 +410,42 @@ def simhash(
 ) -> DataFrame:
     """-> (doc_id, simhash bigint): 64-bit simhash over word unigrams.
 
-    Bit j of simhash = majority vote of bit j over token hashes. JVM-side:
-    explode tokens, per-doc sum of (2*bit-1) per bit position via one groupBy
-    with 64 conditional sums — no UDF. hash_fn must return a LONG column
-    (default xxhash64; kgner.functions.hashing.stable_hash64_col for the
-    oracle-reproducible md5 variant).
+    Bit j of simhash = majority vote of bit j over token hashes: set when
+    more than half of the doc's tokens have it set (a tie leaves it 0).
+    JVM-side: explode tokens, one groupBy with packed per-bit counts, one
+    fold over the 32 packed counts — no UDF. hash_fn must return a LONG
+    column (default xxhash64; kgner.functions.hashing.stable_hash64_col for
+    the oracle-reproducible md5 variant).
     """
     from kgner.operators.partitioning import spread_scan
 
-    # one regex pass; the DuckDB oracle replays this exact form.
-    # spread_scan: tokenization + 64 bit-sums parallelize past a single-file
+    # spread_scan: tokenization + bit counts parallelize past a single-file
     # scan's 1-2 partitions (the groupBy's partial agg runs map-side).
     docs = spread_scan(docs, id_col)
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.col(id_col).alias("doc_id"), F.explode(_tokens(text_col)).alias("tok")
     ).withColumn("h", hash_fn(F.col("tok")))
-    # Packed bit-count aggregation (guide §1.2 "per-task work"): bit j's
-    # majority vote needs only s_j = count of tokens with bit j set, since
+    # Packed bit counts (guide §1.2 "per-task work"): bit j's majority vote
+    # needs only s_j = count of tokens with bit j set, since
     # sum(2*bit-1) = 2*s_j - n. Summing (h >>> j) & 0x0000000100000001
-    # accumulates s_j (low lane) and s_{j+32} (high lane) in one long — 32
-    # aggregate expressions instead of 64, exact integer arithmetic, no
-    # lane overflow below 2^32 tokens per doc.
-    mask = F.lit(0x0000000100000001)
-    sums = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.shiftrightunsigned(F.col("h"), j).bitwiseAND(mask)).alias(
-                f"p{j}"
-            )
-            for j in range(32)
-        ],
+    # accumulates s_j (low lane) and s_{j+32} (high lane) in one long —
+    # exact integer arithmetic, no lane overflow below 2^32 tokens per doc.
+    # Both expressions are JVM-parsed with a fixed node count: every Column
+    # node built in Python is a py4j round trip (~0.35 ms each on a 4-core
+    # host), and building the sums and the per-bit when() fold node by node
+    # cost ~1 s of Spark-driver plan building per call.
+    lanes = ", ".join(
+        f"sum(shiftrightunsigned(h, {j}) & {0x0000000100000001}L)" for j in range(32)
     )
-    n = F.col("n")
-    acc = F.lit(0).cast("long")
-    for j in range(32):
-        lo = F.col(f"p{j}").bitwiseAND(F.lit(0xFFFFFFFF))
-        hi = F.shiftrightunsigned(F.col(f"p{j}"), 32)
-        acc = acc + F.when(
-            lo * 2 > n, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long")) + F.when(
-            hi * 2 > n, F.shiftleft(F.lit(1).cast("long"), j + 32)
-        ).otherwise(F.lit(0).cast("long"))
-    return sums.select("doc_id", acc.alias("simhash"))
+    sums = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"), F.expr(f"array({lanes})").alias("p")
+    )
+    fold = F.expr(
+        "aggregate(sequence(0, 31), 0L, (acc, j) -> acc"
+        " | IF(2 * (p[j] & 4294967295L) > n, shiftleft(1L, j), 0L)"
+        " | IF(2 * shiftrightunsigned(p[j], 32) > n, shiftleft(1L, j + 32), 0L))"
+    )
+    return sums.select("doc_id", fold.alias("simhash"))
 
 
 def simhash_near_pairs(

@@ -111,10 +111,17 @@ def fingerprint(df: DataFrame, text_col: str = "text", chunk: int = 64) -> DataF
     `chunk_fps` (rolling per-`chunk`-token hashes, for partial-overlap
     detection)."""
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    toks = F.split(norm, " ")
+    # the lambda reads a bound token COLUMN: the split expression there
+    # would re-tokenize the doc once per chunk
+    toks = F.col("__fp_toks")
     n_chunks = F.ceil(F.size(toks) / F.lit(chunk)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
         lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i * chunk + 1, chunk))),
     )
-    return df.withColumn("doc_fp", F.xxhash64(norm)).withColumn("chunk_fps", chunks)
+    return (
+        df.withColumn("doc_fp", F.xxhash64(norm))
+        .withColumn("__fp_toks", F.split(norm, " "))
+        .withColumn("chunk_fps", chunks)
+        .drop("__fp_toks")
+    )

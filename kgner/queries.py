@@ -921,13 +921,21 @@ def q_mention_cooccur(spark, sf_dir):
     """Triple op: distinct co-occurring gazetteer-entity pairs per doc
     (kgner.operators.triples.cooccurrence_triples shape)."""
     d = spread_scan(_t(spark, sf_dir, "documents"), "doc_id")
-    toks = _toks(F.col("text"))
     gaz = F.array(*[F.lit(g) for g in GAZ])
-    ents = F.array_sort(
-        F.array_distinct(F.filter(toks, lambda t: F.array_contains(gaz, t)))
-    )
-    pairs = d.select(
+    # `ents` is bound as a COLUMN: the transform lambda below slices it per
+    # entity, and the filter-over-split expression there would re-tokenize
+    # the doc per entity.
+    d = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
+        F.array_sort(
+            F.array_distinct(
+                F.filter(_toks(F.col("text")), lambda t: F.array_contains(gaz, t))
+            )
+        ).alias("ents"),
+    )
+    ents = F.col("ents")
+    pairs = d.select(
+        "doc_id",
         F.explode(
             F.flatten(
                 F.transform(
@@ -1144,6 +1152,10 @@ WHERE rank <= 10
 
 
 def _gaz_bio_tags(toks):
+    """Gazetteer BIO tags of a token array. Pass a bound COLUMN (e.g.
+    F.col("toks")), not the split expression: the lambda reads the previous
+    token, and an expression there is re-evaluated per token — O(L^2) per
+    doc."""
     gaz = F.array(*[F.lit(g) for g in GAZ])
     return F.transform(
         toks,
@@ -1162,11 +1174,13 @@ def q_bioes_tags(spark, sf_dir):
     vectorized UDF, oracled by first/last-of-island logic in SQL."""
     from kgner.operators.ensemble import iobes_udf as to_iobes
 
-    d = _t(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
-    out = d.select(
+    d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.posexplode(to_iobes(_gaz_bio_tags(toks))).alias("pos0", "tag"),
+        _toks(F.col("text")).alias("toks"),
+    )
+    out = d.select(
+        "doc_id",
+        F.posexplode(to_iobes(_gaz_bio_tags(F.col("toks")))).alias("pos0", "tag"),
     ).filter(F.col("tag") != "O")
     return out.select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tag")
 
@@ -1389,13 +1403,11 @@ def q_ensemble_spans(spark, sf_dir):
     from kgner.operators.ensemble import ensemble_votes
 
     d = _t(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
-    tags = _gaz_bio_tags(toks)
     base = d.select(
         F.col("doc_id").cast("string").alias("url"),
         F.lit(0).cast("int").alias("sent_id"),
-        tags.alias("tags"),
-    )
+        _toks(F.col("text")).alias("toks"),
+    ).select("url", "sent_id", _gaz_bio_tags(F.col("toks")).alias("tags"))
     degraded = F.when(
         F.size("tags") > 0,
         F.concat(
@@ -2431,16 +2443,14 @@ def q_entity_window_queries(spark, sf_dir):
     from kgner.operators.iterative import entity_window_queries
 
     d = _t(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
     sents = d.select(
         F.col("doc_id").cast("string").alias("url"),
         F.lit(0).cast("int").alias("sent_id"),
-        toks.alias("tokens"),
+        _toks(F.col("text")).alias("tokens"),
     )
-    spans = d.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(0).cast("int").alias("sent_id"),
-        F.explode(decode_spans_udf(_gaz_bio_tags(toks))).alias("span"),
+    spans = sents.select(
+        "url", "sent_id",
+        F.explode(decode_spans_udf(_gaz_bio_tags(F.col("tokens")))).alias("span"),
     ).select("url", "sent_id", F.col("span.start").alias("start"),
              F.col("span.end").alias("end"))
     out = entity_window_queries(sents, spans, window=2)

@@ -1,6 +1,6 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults are tuned for the sandbox (local[N], 32 cores) but chosen to be the
+Defaults size local[N] to the host's cores (`local_cores`) but are the
 same knobs one would set on a 1000-executor cluster:
 
 - AQE on (runtime coalesce + skew-join splitting for hot domains/keys),
@@ -20,6 +20,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("KGNER_SHUFFLE_PARTITIONS", "32"
 DEFAULT_ARROW_BATCH = int(os.environ.get("KGNER_ARROW_BATCH", "2048"))
 
 
+def local_cores() -> int:
+    """Cores for a local[N] master: $SPARK_GRAFT_CPUS, else the CPUs this
+    process may run on (a larger N only oversubscribes them)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "kgner",
     master: str | None = None,
@@ -27,9 +33,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
-    master = master or os.environ.get(
-        "KGNER_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    )
+    master = master or os.environ.get("KGNER_MASTER", f"local[{local_cores()}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -22,6 +22,10 @@ SUBSET = [
     "sessionize",
     "cosine_topk",
     "exact_dedup",
+    "ngram_jaccard",
+    "minhash_lsh",
+    "simhash_dups",
+    "dedup_survivors",
     "lang_id",
 ]
 

@@ -65,6 +65,43 @@ def test_simhash_near_pairs(spark, docs):
     assert (3, 4) not in pairs
 
 
+def test_simhash_values_match_python_majority_vote(spark, docs):
+    """simhash bit j is set iff MORE than half of the doc's tokens have bit
+    j set in kgner.textops.stable_hash64 — a tie (2*s == n) leaves it 0.
+    The simhash_dups oracle compares only pairs at hamming 0, which a wrong
+    but deterministic fold still passes; this pins the values."""
+    import re
+
+    from kgner.functions.hashing import stable_hash64_col
+    from kgner.operators.dedup import simhash
+    from kgner.textops import stable_hash64
+
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    texts[10] = "alpha beta"  # two tokens: every bit where they differ ties
+    texts[11] = "solo"  # one token: the simhash is its own hash
+
+    ties, high = 0, 0
+    want = {}
+    for doc_id, text in texts.items():
+        toks = re.split(r"\s+", text.lower().strip(" "))
+        counts = [
+            sum((stable_hash64(t) >> j) & 1 for t in toks) for j in range(64)
+        ]
+        bits = [j for j in range(64) if 2 * counts[j] > len(toks)]
+        ties += sum(2 * c == len(toks) for c in counts)
+        high += sum(j >= 32 for j in bits)
+        v = sum(1 << j for j in bits)
+        want[doc_id] = v - (1 << 64) if v >= (1 << 63) else v
+    assert ties and high  # the data exercises both edge cases
+
+    df = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in simhash(df, hash_fn=stable_hash64_col).collect()
+    }
+    assert got == want
+
+
 def test_dedup_keep_min(spark, docs):
     from kgner.operators.dedup import minhash_lsh_pairs, dedup_keep_min
 

@@ -124,3 +124,46 @@ def test_minhash_contract_is_jvm_only(spark):
 
     plan = _plan(QUERIES["minhash_lsh"](spark, SF))
     assert "Python" not in plan
+
+
+def _lambda_bodies(plan: str):
+    """Each `lambdafunction(...)` body of a plan string, parens balanced."""
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        i = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        yield plan[start:i]
+        start = plan.find("lambdafunction(", start + 1)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "shingle_arrays",
+        "fingerprint",
+        "bioes_tags",
+        "ensemble_spans",
+        "entity_window_queries",
+        "mention_cooccur",
+    ],
+)
+def test_tokenize_once_per_doc(spark, name):
+    """Token arrays read inside a lambda must be a bound column: a split()
+    inside a lambda body re-tokenizes the whole doc once per element —
+    O(L^2) per doc. Checked on the optimized plan, so it also catches the
+    optimizer inlining the column back into the lambda."""
+    from kgner.operators.dedup import shingle_arrays
+    from kgner.operators.textquality import fingerprint
+    from kgner.queries import QUERIES
+
+    operators = {"shingle_arrays": shingle_arrays, "fingerprint": fingerprint}
+    if name in operators:
+        df = operators[name](spark.read.parquet(f"{SF}/documents.parquet"))
+    else:
+        df = QUERIES[name](spark, SF)
+    bodies = list(_lambda_bodies(df._jdf.queryExecution().optimizedPlan().toString()))
+    assert bodies, "expected higher-order functions in the plan"
+    assert not [b for b in bodies if "split(" in b]

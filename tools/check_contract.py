@@ -44,7 +44,7 @@ def main():
     only = set(sys.argv[2:])
 
     from kgner.queries import ORACLES, QUERIES
-    from kgner.session import get_spark
+    from kgner.session import get_spark, local_cores
 
     # contract-shape self-check: every query must carry an oracle, and the
     # counts are printed so a driver run that silently drops an entry (the
@@ -55,7 +55,10 @@ def main():
     assert not stray_oracle, f"oracles without a query: {stray_oracle}"
     print(f"contract: {len(QUERIES)} queries / {len(ORACLES)} oracles")
 
-    spark = get_spark("contract-check", master="local[8]", shuffle_partitions=16)
+    cores = local_cores()
+    spark = get_spark(
+        "contract-check", master=f"local[{cores}]", shuffle_partitions=2 * cores
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

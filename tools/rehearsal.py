@@ -78,10 +78,11 @@ def main():
     small = int(sys.argv[2]) if len(sys.argv) > 2 else big // 8
 
     from kgner.fixtures import build_fixtures, to_spark
-    from kgner.session import get_spark
+    from kgner.session import get_spark, local_cores
 
-    spark = get_spark("kgner-rehearsal", master="local[32]",
-                      shuffle_partitions=64)
+    cores = local_cores()
+    spark = get_spark("kgner-rehearsal", master=f"local[{cores}]",
+                      shuffle_partitions=2 * cores)
     spark.sparkContext.setLogLevel("ERROR")
     n_base = 25_000
     fx = build_fixtures(n_entities=150, n_pages=n_base, giant_pages=2)
